@@ -11,12 +11,13 @@ file stays a thin adapter.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from etl_globalretail_spark.plans.registry import ALL_ORACLE, ALL_QUERIES  # noqa: E402
 

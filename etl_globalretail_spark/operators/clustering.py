@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_globalretail_spark.plans.queries import make_query_decorator
-from etl_globalretail_spark.sources.readers import load_table
+from etl_globalretail_spark.sources.readers import data_partitions, load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -64,11 +64,8 @@ def kmeans_fit(
     # Size the iterated frame's partitioning to the DATA, not the input
     # split count: every Lloyd round launches a job over this cached
     # frame, so 32 near-empty tasks per round is pure scheduler overhead
-    # (measured ~0.65 s/round at sf0.1's 2 000 vectors). One task per
-    # ~32 k vectors, capped at the cluster's parallelism — at 100 TB the
-    # cap binds and this is a no-op; on small corpora rounds collapse to
-    # a handful of tasks. (Same device as sources/readers._spread, in
-    # the opposite direction.)
+    # (measured ~0.65 s/round at sf0.1's 2 000 vectors). data_partitions
+    # gives one task per 32 k vectors, capped at the cluster's parallelism.
     raw = df.select(
         F.col(id_col).alias("__id"),
         F.col(vec_col).cast("array<double>").alias("__v"),
@@ -77,11 +74,7 @@ def kmeans_fit(
     # exactly ONCE; every Lloyd round below then reads cached blocks
     # through the narrow coalesce.
     n_rows = raw.count()
-    parts = max(
-        1,
-        min(spark.sparkContext.defaultParallelism, -(-n_rows // 32768)),
-    )
-    base = raw.coalesce(parts)
+    base = raw.coalesce(data_partitions(spark, n_rows, 32768))
     try:
         init = (
             base.select("__id", "__v")

@@ -26,20 +26,19 @@ def _merge(qs: dict, oracle: dict) -> None:
 
 _merge(_relational.QUERIES, _relational.ORACLE)
 
-for _mod in ("operators.dedup", "operators.similarity", "operators.text",
-             "operators.multimodal", "operators.skew", "operators.components",
-             "operators.sampling", "operators.profiling", "operators.asof",
-             "operators.joins", "sources.pyds", "sources.catalog",
-             "operators.corpus", "sources.formats",
-             "operators.clustering", "operators.quality",
-             "plans.star_schema", "plans.analytics", "plans.tpch", "plans.scd",
-             "streaming.windows", "streaming.stateful",
-             "functions.tablefuncs"):
-    try:
-        _m = __import__(f"etl_globalretail_spark.{_mod}", fromlist=["QUERIES", "ORACLE"])
-        _merge(_m.QUERIES, _m.ORACLE)
-    except ImportError:
-        pass  # family not built yet (round-incremental)
+# No ImportError guard: a broken family fails the registry, not the gate silently.
+FAMILIES = ("operators.dedup", "operators.similarity", "operators.text",
+            "operators.multimodal", "operators.skew", "operators.components",
+            "operators.sampling", "operators.profiling", "operators.asof",
+            "operators.joins", "sources.pyds", "sources.catalog",
+            "operators.corpus", "sources.formats",
+            "operators.clustering", "operators.quality",
+            "plans.star_schema", "plans.analytics", "plans.tpch", "plans.scd",
+            "streaming.windows", "streaming.stateful",
+            "functions.tablefuncs")
+for _mod in FAMILIES:
+    _m = __import__(f"etl_globalretail_spark.{_mod}", fromlist=["QUERIES", "ORACLE"])
+    _merge(_m.QUERIES, _m.ORACLE)
 
 
 # ---------------------------------------------------------------------------

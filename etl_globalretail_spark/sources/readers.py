@@ -97,47 +97,53 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
 _SPREAD_EXEMPT = frozenset({"region", "nation"})
 
 
+def data_partitions(spark: SparkSession, amount: int, per_task: int) -> int:
+    """The engine's one partition-sizing rule: one task per ``per_task``
+    units of data (scan bytes, cached rows), clamped to
+    [1, defaultParallelism]."""
+    return max(1, min(spark.sparkContext.defaultParallelism, -(-amount // per_task)))
+
+
+SPREAD_BYTES_PER_TASK = 128 << 10
+
+
 def _spread(spark: SparkSession, df: DataFrame, path: str | None = None) -> DataFrame:
-    """Fan a narrow scan out to the cluster's parallelism.
+    """Round-robin a narrow scan to ``data_partitions(file size, 128 KiB)``.
 
     The testdata ships each table as ONE single-row-group parquet file, so
     the scan is one partition and every pre-shuffle map expression runs on
-    one core — tokenization/shingling over documents was measured 30× slower
-    than the same plan spread over local[32]. A round-robin repartition costs
-    one exchange of a ≤11 MB table here; on a real corpus the scan already
-    has thousands of splits and this is a no-op (guarded, not unconditional).
-    Filters and column pruning still push into the scan below the exchange.
+    one core. A file under 128 KiB stays that one task with no exchange:
+    another task (and another Python worker behind an Arrow kernel) costs
+    more start-up than such a table takes to process. The rule counts
+    bytes, not rows, because rows differ in weight: 32k rows per task put
+    sf0.1's 5 000 documents in one task and took q24 from 4.22 s to 7.48 s
+    on 4 cores, against 4.18 s at 128 KiB per task. The defaultParallelism
+    cap binds from 128 KiB × cores up (on 4 cores: lineitem at sf0.01, the
+    five largest tables at sf0.1). Filters and column pruning still push
+    into the scan below the exchange.
 
     The split count is estimated from the file size with Spark's own
     packing formula (maxSplitBytes = min(maxPartitionBytes,
     max(openCostInBytes, size / defaultParallelism))) — a 7 µs os.stat
     instead of ``df.rdd.getNumPartitions()``, whose DataFrame→RDD
-    conversion plans the scan and was measured at ~180 ms PER TABLE LOAD
-    (load_table runs 1–6× per query; across the bench that probe alone
-    was seconds of driver time). Non-local paths fall back to the probe.
+    conversion plans the scan and was measured at ~180 ms PER TABLE LOAD.
+    A scan that already has the splits wanted (a real corpus) is left as
+    is. Non-local paths fall back to the probe and to defaultParallelism.
     """
-    if os.environ.get('SPREAD_MODE')=='off':
-        return df
-    want = spark.sparkContext.defaultParallelism
-    if os.environ.get('SPREAD_MODE')=='data':
-        try:
-            sz = os.path.getsize(path) if path else 0
-        except OSError:
-            sz = 0
-        want = max(1, min(want, sz // int(os.environ.get('SPREAD_BPT','65536'))))
-    splits: int | None = None
-    if path is not None:
-        try:
-            size = os.path.getsize(path)
-            mpb = _size_conf(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
-            open_cost = _size_conf(spark, "spark.sql.files.openCostInBytes", 4 << 20)
-            max_split = min(mpb, max(open_cost, size // max(want, 1)))
-            splits = max(1, -(-size // max(max_split, 1)))
-        except OSError:
-            splits = None
-    if splits is None:
-        splits = df.rdd.getNumPartitions()
-    if splits < min(want, 8):
+    cores = spark.sparkContext.defaultParallelism
+    try:
+        size = os.path.getsize(path) if path is not None else None
+    except OSError:
+        size = None
+    if size is None:
+        want, splits = cores, df.rdd.getNumPartitions()
+    else:
+        want = data_partitions(spark, size, SPREAD_BYTES_PER_TASK)
+        mpb = _size_conf(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
+        open_cost = _size_conf(spark, "spark.sql.files.openCostInBytes", 4 << 20)
+        max_split = min(mpb, max(open_cost, size // cores))
+        splits = max(1, -(-size // max(max_split, 1)))
+    if splits < want:
         return df.repartition(want)
     return df
 

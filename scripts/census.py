@@ -6,9 +6,10 @@ Usage: python scripts/census.py
 from __future__ import annotations
 
 import collections
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:

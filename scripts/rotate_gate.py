@@ -27,10 +27,12 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def qnum(name: str) -> int:
@@ -41,7 +43,7 @@ def qnum(name: str) -> int:
 def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 50
     sampled: set[str] = set()
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
         data = json.load(open(path))
         qs = data.get("queries", data)
         if isinstance(qs, dict):

@@ -10,10 +10,11 @@ Usage: python scripts/scale_rehearsal.py [sf1_dir] > report
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 QUERIES = [
     # heaviest bench entries (BENCH_r06 tail) across operator families
